@@ -21,6 +21,20 @@ def normalize_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
+def tokens(col: Column) -> Column:
+    """Whitespace tokens of the normalized text — the one tokenizer of
+    the text/LM family. Blank text yields ``[""]`` (Spark's split of an
+    empty string), so callers that count or pair tokens use
+    :func:`nonempty_tokens`."""
+    return F.split(normalize_text(col), " ")
+
+
+def nonempty_tokens(col: Column) -> Column:
+    """:func:`tokens` without empty strings: blank text → ``[]``. The
+    Spark twin of the oracles' ``list_filter(string_split(…), x -> x <> '')``."""
+    return F.filter(tokens(col), lambda x: x != F.lit(""))
+
+
 def fingerprint(col: Column) -> Column:
     """Document fingerprint: md5 of the normalized text (deterministic,
     engine-portable)."""
@@ -36,8 +50,7 @@ def char_length(col: Column) -> Column:
 
 def token_count_ws(col: Column) -> Column:
     """Whitespace tokenization count; empty/blank → 0."""
-    t = normalize_text(col)
-    return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, " ")))
+    return F.when(normalize_text(col) == "", F.lit(0)).otherwise(F.size(tokens(col)))
 
 
 WORD_RE = "[A-Za-z0-9]+"
@@ -74,7 +87,7 @@ def punct_ratio(col: Column) -> Column:
 
 def stopword_ratio(col: Column, stopwords: tuple[str, ...] = ("the", "a", "and", "of", "to")) -> Column:
     """Fraction of whitespace tokens that are (English) stopwords."""
-    toks = F.split(normalize_text(col), " ")
+    toks = tokens(col)
     hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
     n = F.size(toks)
     return F.when(n == 0, F.lit(0.0)).otherwise(F.round(hits / n, 6))
