@@ -108,13 +108,15 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # times per invocation, and the bench pays it again every pass). The
 # probe's answer for a semantically identical plan in the same Spark
 # application is stable (same files, same split conf), so memoize on
-# (applicationId, semanticHash(plan), target). Bounded: the key space
-# is the registry's distinct scan plans. Correctness: a stale entry
-# could only arise if the SAME application re-read CHANGED input files
-# under an identical plan — the bench/oracle inputs are immutable
-# parquet fixtures, and a miss only costs one extra exchange (or one
-# missing exchange on a plan that already has >= target partitions),
-# never wrong values.
+# (applicationId, semanticHash(plan), target). Bounded: entries of any
+# other application are evicted on the first probe under a new one, so
+# the key space is the current application's distinct scan plans.
+# Risks, all perf-only (an extra exchange, or a missing one on a plan
+# that already has >= target partitions; never wrong values):
+# semanticHash is a 32-bit hash, so two distinct plans of one
+# application can collide and share a decision; and a stale entry
+# arises if the SAME application re-reads CHANGED input files under an
+# identical plan (the bench/oracle inputs are immutable fixtures).
 _WIDTH_MEMO: dict[tuple[str, int, int], bool] = {}
 
 
@@ -135,11 +137,13 @@ def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> 
     sess = df.sparkSession
     target = min_partitions or sess.sparkContext.defaultParallelism
     try:
-        key = (sess.sparkContext.applicationId, df.semanticHash(), target)
+        app_id = sess.sparkContext.applicationId
+        key = (app_id, df.semanticHash(), target)
         needs = _WIDTH_MEMO.get(key)
         if needs is None:
-            needs = df.rdd.getNumPartitions() < target
-            _WIDTH_MEMO[key] = needs
+            for stale in [k for k in _WIDTH_MEMO if k[0] != app_id]:
+                del _WIDTH_MEMO[stale]
+            needs = _WIDTH_MEMO[key] = df.rdd.getNumPartitions() < target
     except Exception:  # noqa: BLE001 — probe directly if hashing fails
         needs = df.rdd.getNumPartitions() < target
     if needs:

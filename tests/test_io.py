@@ -5,6 +5,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from proto_to_avro_ql_spark.sources import io as IO
 from proto_to_avro_ql_spark.sources.io import (
     QueryCache,
     avro_supported,
@@ -12,6 +13,17 @@ from proto_to_avro_ql_spark.sources.io import (
     sink_json_direct,
     write_avro_or_parquet,
 )
+
+
+class TestWidthMemo:
+    def test_other_application_keys_are_evicted(self, spark, monkeypatch):
+        stale = ("app-from-an-earlier-session", 12345, 4)
+        monkeypatch.setattr(IO, "_WIDTH_MEMO", {stale: True})
+        IO.ensure_min_parallelism(spark.range(10))
+        app_id = spark.sparkContext.applicationId
+        assert stale not in IO._WIDTH_MEMO
+        assert len(IO._WIDTH_MEMO) == 1
+        assert all(k[0] == app_id for k in IO._WIDTH_MEMO)
 
 
 class TestQueryCache:
