@@ -18,7 +18,10 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / "proto_to_avro_ql_spark"
 SCOPE = [PKG / "entry_registry.py", *sorted((PKG / "operators").glob("*.py"))]
 LM_HOME = PKG / "operators" / "lm.py"
 
-TOKENIZE = re.compile(r"F\.split\((?:TX\.)?normalize_text\(")
+TOKENIZE = re.compile(
+    r"F\.split\((?:TX\.)?normalize_text\("
+    r"|F\.split\(\s*F\.trim\(\s*F\.regexp_replace\(\s*F\.lower\("
+)
 PAIR = re.compile(r"slice\(a,\s*2,\s*size\(a\)\s*-\s*1\)")
 HOLDOUT = re.compile(r"%\s*5\s*=\s*0\s+THEN\s+1\s+ELSE\s+0")
 ORACLE_BUILDER = re.compile(r"^_\w*_oracle$")
@@ -73,6 +76,7 @@ def test_ratchet_sees_a_copy(tmp_path, monkeypatch):
     planted.write_text(
         'def q_x():\n'
         '    a = F.split(TX.normalize_text(F.col("text")), " ")\n'
+        '    a = F.split(F.trim(F.regexp_replace(F.lower(t), "x", " ")), " ")\n'
         '    b = "zip_with(slice(a, 1, size(a) - 1), slice(a, 2, size(a) - 1))"\n'
         '    return F.expr("CASE WHEN (h) % 5 = 0 THEN 1 ELSE 0 END")\n'
         'def _x_oracle():\n'
@@ -81,8 +85,8 @@ def test_ratchet_sees_a_copy(tmp_path, monkeypatch):
     module = sys.modules[__name__]
     monkeypatch.setattr(module, "SCOPE", [planted])
     monkeypatch.setattr(module, "PKG", tmp_path)
-    assert len(_hits(TOKENIZE)) == 1
+    assert len(_hits(TOKENIZE)) == 2
     assert len(_hits(PAIR)) == 1
     assert _hits(HOLDOUT, lambda path, fn: bool(ORACLE_BUILDER.match(fn))) == [
-        "planted.py:4 (q_x)"
+        "planted.py:5 (q_x)"
     ]
