@@ -15,10 +15,15 @@ from pyspark.sql import functions as F
 # --- normalization ---------------------------------------------------------
 
 
+# RE2's \s (the oracles' DuckDB regexp_replace): Java's \s also matches
+# the vertical tab \x0B, which would split tokens the oracles keep whole.
+_WS_RE = r"[ \t\n\f\r]+"
+
+
 def normalize_text(col: Column) -> Column:
     """Canonical form for near-dup hashing: lowercase, collapse
     whitespace, trim."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(col), _WS_RE, " "))
 
 
 def tokens(col: Column) -> Column:

@@ -116,3 +116,40 @@ class TestTokenizerFertility:
             assert r["sum_bpe"] >= r["sum_ws"], r
             assert r["fertility_micro"] >= 1_000_000, r
             assert r["bytes_per_bpe_micro"] > 0, r
+
+
+class TestTokenizeMatchesOracle:
+    """The Spark tokenizer against the oracles' DuckDB spelling, on the
+    edge inputs: blank, NULL, mixed whitespace, a vertical tab (Java's
+    \\s matches it, RE2's does not), one token and two tokens."""
+
+    CASES = ["", "   ", None, "a\tb\nc", "a\x0bb", "Word", "two  Words"]
+    ORACLE = (
+        r"SELECT list_filter(string_split(trim(regexp_replace(lower(?),"
+        r" '\s+', ' ', 'g')), ' '), x -> x <> '')"
+    )
+
+    def _docs(self, spark):
+        return spark.createDataFrame(list(enumerate(self.CASES)), "doc_id long, text string")
+
+    def test_nonempty_tokens_match_duckdb(self, spark):
+        import duckdb
+
+        rows = self._docs(spark).select("doc_id", TX.nonempty_tokens(F.col("text")).alias("a"))
+        got = {r.doc_id: r.a for r in rows.collect()}
+        con = duckdb.connect()
+        for i, text in enumerate(self.CASES):
+            want = con.execute(self.ORACLE, [text]).fetchone()[0]
+            assert got[i] == want, (text, got[i], want)
+
+    def test_short_documents_produce_no_pairs(self, spark):
+        from proto_to_avro_ql_spark.operators import lm as LM
+
+        arrs = LM.token_arrays(self._docs(spark), "doc_id")
+        pairs = LM.ngrams(arrs, "doc_id").collect()
+        sizes = {r.doc_id: len(r.a or []) for r in arrs.collect()}
+        assert sorted(r.doc_id for r in pairs) == sorted(
+            i for i, n in sizes.items() for _ in range(n - 1)
+        )
+        assert {r.doc_id for r in pairs} == {3, 6}
+        assert [(r.v, r.w) for r in pairs if r.doc_id == 6] == [("two", "words")]
