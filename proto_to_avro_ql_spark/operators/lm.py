@@ -42,17 +42,18 @@ from proto_to_avro_ql_spark.functions.text import nonempty_tokens
 GRAM_FIELDS = ("u", "v", "w")
 
 
-def holdout_flag(id_col: str = "doc_id") -> Column:
-    """``is_eval``: 1 for the held-out 20% (``mix31(id) % 5 = 0``), 0 for
-    the training 80% — the portable deterministic split the oracles
+def holdout_flag() -> Column:
+    """``is_eval``: 1 for the held-out 20% (``mix31(doc_id) % 5 = 0``), 0
+    for the training 80% — the portable deterministic split the oracles
     spell with ``PK.mix31_duckdb_sql``."""
-    mix = PK.mix31_spark_sql(id_col)
+    mix = PK.mix31_spark_sql("doc_id")
     return F.expr(f"CASE WHEN ({mix}) % 5 = 0 THEN 1 ELSE 0 END").alias("is_eval")
 
 
-def token_arrays(docs: DataFrame, *keys: str | Column, text_col: str = "text") -> DataFrame:
-    """``(keys…, a)`` with ``a`` the non-empty normalized tokens."""
-    return docs.select(*keys, nonempty_tokens(F.col(text_col)).alias("a"))
+def token_arrays(docs: DataFrame, *keys: str | Column) -> DataFrame:
+    """``(keys…, a)`` with ``a`` the non-empty normalized tokens of
+    ``text``."""
+    return docs.select(*keys, nonempty_tokens(F.col("text")).alias("a"))
 
 
 def ngram_array(k: int = 2, sep: str | None = None) -> Column:
