@@ -4,9 +4,9 @@ occurrence aggregate, and the Kneser-Ney count relations built from
 it. Tokenization itself lives in functions/text.py
 (:func:`~proto_to_avro_ql_spark.functions.text.nonempty_tokens`).
 
-Every builder spells exactly what the entries spelled by hand, so an
-entry ported onto them keeps its optimized plan; the DuckDB oracles
-keep their own SQL as the reference implementation.
+The DuckDB oracles keep their own SQL as the reference
+implementation; tests/test_substrate_ratchet.py keeps these spellings
+from being copied back into the entries.
 
 Transport (shared by every LM entry): a per-n-gram-TYPE
 log-probability is frozen once to integer micros — fixed-order IEEE
