@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from proto_to_avro_ql_spark.functions import text as TX
+from proto_to_avro_ql_spark.operators.lm import ngrams
 
 
 def repetition_signals(
@@ -215,32 +216,23 @@ def bigram_lm_score(
 
     Docs with fewer than two tokens have no bigrams and drop out.
     """
-    from proto_to_avro_ql_spark.functions.stable import DEC
-
-    toks = TX.tokens(F.col(text_col))
-    n = F.size(toks)
-    pairs = F.arrays_zip(
-        F.slice(toks, 1, n - 1).alias("w1"),
-        F.slice(toks, 2, n - 1).alias("w2"),
-    )
-    big = (
-        docs.select(F.col(id_col), F.explode(pairs).alias("p"))
-        .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .where((F.col("w1") != "") & (F.col("w2") != ""))
-    )
     from pyspark.sql.window import Window
 
-    bc = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
+    from proto_to_avro_ql_spark.functions.stable import DEC
+
+    arrs = docs.select(F.col(id_col), TX.nonempty_tokens(F.col(text_col)).alias("a"))
+    big = ngrams(arrs, id_col)
+    bc = big.groupBy("v", "w").agg(F.count(F.lit(1)).alias("c2"))
     # context counts as a window over the bigram counts (partition by
-    # w1) instead of a separate aggregate + rejoin — one exchange
+    # v) instead of a separate aggregate + rejoin — one exchange
     # fewer, no join; bc is the per-bigram relation either way.
-    c1 = F.sum("c2").over(Window.partitionBy("w1"))
+    c1 = F.sum("c2").over(Window.partitionBy("v"))
     probs = bc.select(
-        "w1",
-        "w2",
+        "v",
+        "w",
         F.log(F.col("c2").cast("double") / c1).cast(DEC).alias("logp"),
     )
-    scored = big.join(probs, ["w1", "w2"])
+    scored = big.join(probs, ["v", "w"])
     return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.round(F.sum("logp").cast("double") / F.count(F.lit(1)), 6).alias(

@@ -1,8 +1,8 @@
 """Ratchet: the text/LM substrate spellings live in one home each.
 
 Tokenization (normalize → split) is spelled only in functions/text.py,
-the adjacent-pair zip_with literal and the Spark-side mix31 holdout
-flag only in operators/lm.py. A copy reappearing in entry_registry.py
+the adjacent-pair tail slice and the Spark-side mix31 holdout flag only
+in operators/lm.py. A copy reappearing in entry_registry.py
 or operators/ fails here; the DuckDB oracle builders (``_…_oracle``)
 keep their own SQL and are exempt from the holdout check.
 """
@@ -22,7 +22,8 @@ TOKENIZE = re.compile(
     r"F\.split\((?:TX\.)?normalize_text\("
     r"|F\.split\(\s*F\.trim\(\s*F\.regexp_replace\(\s*F\.lower\("
 )
-PAIR = re.compile(r"slice\(a,\s*2,\s*size\(a\)\s*-\s*1\)")
+# The tail slice of an adjacent-pair zip, in SQL or Column-API spelling.
+PAIR = re.compile(r"slice\(\s*\w+\s*,\s*2\s*,")
 HOLDOUT = re.compile(r"%\s*5\s*=\s*0\s+THEN\s+1\s+ELSE\s+0")
 ORACLE_BUILDER = re.compile(r"^_\w*_oracle$")
 
@@ -78,6 +79,7 @@ def test_ratchet_sees_a_copy(tmp_path, monkeypatch):
         '    a = F.split(TX.normalize_text(F.col("text")), " ")\n'
         '    a = F.split(F.trim(F.regexp_replace(F.lower(t), "x", " ")), " ")\n'
         '    b = "zip_with(slice(a, 1, size(a) - 1), slice(a, 2, size(a) - 1))"\n'
+        '    c = F.arrays_zip(F.slice(t, 1, n - 1), F.slice(t, 2, n - 1))\n'
         '    return F.expr("CASE WHEN (h) % 5 = 0 THEN 1 ELSE 0 END")\n'
         'def _x_oracle():\n'
         '    return "CASE WHEN (h) % 5 = 0 THEN 1 ELSE 0 END"\n'
@@ -86,7 +88,7 @@ def test_ratchet_sees_a_copy(tmp_path, monkeypatch):
     monkeypatch.setattr(module, "SCOPE", [planted])
     monkeypatch.setattr(module, "PKG", tmp_path)
     assert len(_hits(TOKENIZE)) == 2
-    assert len(_hits(PAIR)) == 1
+    assert len(_hits(PAIR)) == 2
     assert _hits(HOLDOUT, lambda path, fn: bool(ORACLE_BUILDER.match(fn))) == [
-        "planted.py:5 (q_x)"
+        "planted.py:6 (q_x)"
     ]
