@@ -3,7 +3,7 @@
 Tokenization (normalize → split) is spelled only in functions/text.py,
 the adjacent-pair tail slice and the Spark-side mix31 holdout flag only
 in operators/lm.py. A copy reappearing in entry_registry.py
-or operators/ fails here; the DuckDB oracle builders (``_…_oracle``)
+or operators/ fails here; the DuckDB oracle functions (``_…_oracle``)
 keep their own SQL and are exempt from the holdout check.
 """
 
@@ -25,7 +25,7 @@ TOKENIZE = re.compile(
 # The tail slice of an adjacent-pair zip, in SQL or Column-API spelling.
 PAIR = re.compile(r"slice\(\s*\w+\s*,\s*2\s*,")
 HOLDOUT = re.compile(r"%\s*5\s*=\s*0\s+THEN\s+1\s+ELSE\s+0")
-ORACLE_BUILDER = re.compile(r"^_\w*_oracle$")
+ORACLE_FN = re.compile(r"^_\w*_oracle$")
 
 
 def _owners(path: pathlib.Path) -> dict[int, str]:
@@ -66,7 +66,7 @@ def test_pair_literal_spelled_only_in_lm():
 
 def test_holdout_flag_spelled_only_in_lm():
     def exempt(path, fn):
-        return path == LM_HOME or bool(ORACLE_BUILDER.match(fn))
+        return path == LM_HOME or bool(ORACLE_FN.match(fn))
 
     assert _hits(HOLDOUT, exempt) == [], "use operators.lm.holdout_flag"
 
@@ -89,6 +89,6 @@ def test_ratchet_sees_a_copy(tmp_path, monkeypatch):
     monkeypatch.setattr(module, "PKG", tmp_path)
     assert len(_hits(TOKENIZE)) == 2
     assert len(_hits(PAIR)) == 2
-    assert _hits(HOLDOUT, lambda path, fn: bool(ORACLE_BUILDER.match(fn))) == [
+    assert _hits(HOLDOUT, lambda path, fn: bool(ORACLE_FN.match(fn))) == [
         "planted.py:6 (q_x)"
     ]
