@@ -61,7 +61,7 @@ def bm25_search(
             F.count(F.when(F.col("t") == term, 1)).alias(f"tf{i}")
             for i, term in enumerate(query_terms)
         ],
-    ).persist()
+    )
     stats = per_doc.agg(
         F.avg("dl").alias("avgdl"),
         F.count(F.lit(1)).alias("n"),

@@ -740,10 +740,13 @@ def _mean_vectors_int(
     plan-build py4j time than the explode costs execution time at any
     local SF (ext_kmeans 1.78 → 2.79 s interleaved min — the r12 §A
     64-term-expression lesson again), so full-dim callers keep the
-    exploded shape and skip the dim probe entirely."""
+    exploded shape and skip the dim probe entirely.
+
+    A NULL v drops out of both the sums and the count in either shape
+    (posexplode emits no rows for it; count(v) skips it)."""
     if dim is not None:
         per = assigned.groupBy(*group, "cell").agg(
-            F.count(F.lit(1)).alias("n"),
+            F.count(F.col("v")).alias("n"),
             *[F.sum(F.col("v")[i]).alias(f"_s{i}") for i in range(dim)],
         )
         return per.select(
@@ -805,11 +808,6 @@ def kmeans_cells_int(
     qv, cents = kmeans_train_int(
         embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col
     )
-    # cents is k tiny rows with the full Lloyd's chain as lineage;
-    # persist so the final assignment and the centroid join don't each
-    # re-run training (the ivf_topk_int pattern) — allowlisted in
-    # tools/audit_caches, dropped by the session-hygiene sweep.
-    cents = cents.persist()
     return _assign_cells_int(qv, cents, ["vec_id"]).join(F.broadcast(cents), "cell")
 
 
@@ -841,12 +839,7 @@ def ivf_topk_int(
     qv, cents = kmeans_train_int(
         embeddings, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col
     )
-    # cents is k rows but its lineage is the full Lloyd's chain; persist
-    # so the probe crossJoin and the final assignment both read the
-    # materialized 8-row relation instead of re-running training —
-    # allowlisted in tools/audit_caches (single-shot, session sweep drops it).
-    cents = cents.persist()
-    assigned = _assign_cells_int(qv, cents, ["vec_id"]).persist()
+    assigned = _assign_cells_int(qv, cents, ["vec_id"])
     q = assigned.where(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -871,10 +864,6 @@ def ivf_topk_int(
         .select("query_id", "neighbor_id", l2sq_int("qv", "nv").alias("l2_dist"))
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("l2_dist"), F.asc("neighbor_id"))
-    # cents and assigned stay persisted into the returned plan (cents:
-    # probe ranking + the assignment pass; assigned: query extraction +
-    # the candidate scan) — same single-shot shape as ivf_topk,
-    # allowlisted in tools/audit_caches.
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
@@ -924,19 +913,13 @@ def pq_adc_topk_int(
     per training iteration, ADC is a keyed join + hash aggregate,
     nothing vector-sized shuffles."""
     dim = len(embeddings.select(vec_col).first()[0])
-    sv = _sub_slices_int(embeddings, m, id_col, vec_col, dim=dim).persist()
+    sv = _sub_slices_int(embeddings, m, id_col, vec_col, dim=dim)
     books = sv.where(F.col("vec_id") < k_codes).select(
         "sub", F.col("vec_id").alias("cell"), F.col("v").alias("cv")
     )
     for _ in range(iters):
         assigned = _assign_cells_int(sv, books, ["vec_id", "sub"])
         books = _mean_vectors_int(assigned, ["sub"], dim // m)
-    # books is m*k_codes tiny rows but its lineage is the full Lloyd's
-    # chain; persist so the corpus encoding and the query LUT both read
-    # the materialized codebooks instead of re-running training twice
-    # (the ivf_topk_int cents.persist() pattern) — allowlisted in
-    # tools/audit_caches, dropped by the session-hygiene sweep.
-    books = books.persist()
     codes = _assign_cells_int(sv, books, ["vec_id", "sub"]).select(
         F.col("vec_id").alias("neighbor_id"), "sub", "cell"
     )
@@ -953,9 +936,6 @@ def pq_adc_topk_int(
         .agg(F.sum("pd").alias("adc_dist"))
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    # sv stays persisted into the returned plan (codebook training,
-    # encoding, and the query LUT all read it) — single-shot shape,
-    # allowlisted in tools/audit_caches.
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
@@ -993,7 +973,7 @@ def semdedup(
 
     Scale shape: training + assignment are kmeans_cells_int's (one
     corpus pass per iteration, (cell, dim, partial-sum) shuffles,
-    broadcast centroids); the assigned relation is persisted once and
+    broadcast centroids); the assigned relation is built once and
     read three ways (both self-join sides + the output spine); the
     pair scan shuffles on cell (cluster-bucketed, co-partitioned
     self-join); the dup-id set joins back on id.
@@ -1004,7 +984,6 @@ def semdedup(
         )
         .select(id_col, "cell")
         .join(embeddings.select(id_col, vec_col), id_col)
-        .persist()
     )
     # r12 pair stage: norms once per row; salted cell join (k cells
     # alone cannot occupy a cluster — same recipe and rationale as

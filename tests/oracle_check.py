@@ -118,10 +118,11 @@ def compare(spark, sf_dir: str, name: str, query_fn, oracle: str | None):
     try:
         sdf = query_fn(spark, sf_dir).toPandas()
     finally:
-        # Entries may cache() shared subtrees and return (allowlisted in
-        # tools/audit_caches.py); over a 361-entry sweep in ONE session
-        # those accumulate (round-5 verdict #1). Drop them per entry so
-        # the gate session stays flat and each entry runs cold.
+        # The entries that still persist (each one measured, listed in
+        # tools/audit_caches.ALLOWED) return with the cache populated;
+        # over a 396-entry sweep in ONE session those would accumulate.
+        # Drop them per entry so the gate session stays flat and each
+        # entry runs cold.
         spark.catalog.clearCache()
     if oracle is None:
         return {"name": name, "mode": "rows-only", "rows": len(sdf), "ok": True}

@@ -26,6 +26,21 @@ def optimized_plan(df) -> str:
     return df._jdf.queryExecution().toString()
 
 
+def reused_exchanges(spark, sf_dir, name) -> str:
+    """Run the entry once and return the ReusedExchange lines of its
+    final adaptive plan: each reads an exchange that already ran once
+    in the same query."""
+    from proto_to_avro_ql_spark.entry_queries import QUERIES
+
+    # a relation another test left cached would replace the exchange
+    # with an InMemoryTableScan through CacheManager plan matching
+    spark.catalog.clearCache()
+    df = QUERIES[name](spark, sf_dir)
+    df.collect()
+    final = physical_plan(df).split("== Initial Plan ==")[0]
+    return "\n".join(l for l in final.splitlines() if "ReusedExchange" in l)
+
+
 class TestScanPushdown:
     def test_filter_and_columns_pushed(self, spark, sf_dir):
         p = read_table(spark, sf_dir, "part")
@@ -611,11 +626,13 @@ class TestSession4Plans:
 
     def test_pagerank_no_cartesian(self, spark, sf_dir):
         """Three unrolled iterations of keyed joins — never a nested
-        loop; the cached edge relation is reused across steps."""
+        loop; the edge relation's exchange runs once and is reused
+        across steps."""
         plan = self._plan(spark, sf_dir, "ext_pagerank")
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
-        assert "InMemoryTableScan" in plan, plan  # edges cached
+        reused = reused_exchanges(spark, sf_dir, "ext_pagerank")
+        assert "Exchange hashpartitioning(src#" in reused, reused  # edges
 
 
 class TestSession6Plans:
@@ -801,10 +818,12 @@ class TestSession6Plans:
         assert "EvalPython" not in plan, plan
 
     def test_label_propagation_reuses_cached_adjacency(self, spark, sf_dir):
-        """Three rounds iterate over the CACHED adjacency relation with
-        keyed joins — no cartesian, no single-partition stage."""
+        """Three rounds iterate over ONE edge build (its exchange runs
+        once, the other readers are ReusedExchange) with keyed joins —
+        no cartesian, no single-partition stage."""
         plan = self._plan(spark, sf_dir, "ext_label_propagation")
-        assert "InMemoryTableScan" in plan, plan
+        reused = reused_exchanges(spark, sf_dir, "ext_label_propagation")
+        assert "Exchange hashpartitioning(u#" in reused, reused
         assert "CartesianProduct" not in plan, plan
         assert "Exchange SinglePartition" not in plan, plan
 
@@ -930,11 +949,14 @@ class TestSession7Plans:
         )
 
     def test_freq_triples_candidates_from_pairs(self, spark, sf_dir):
-        """Candidate triples come from the CACHED frequent-pair
-        relation's self-joins (Apriori), support from keyed joins on
-        the cached basket relation — all equi joins."""
+        """Candidate triples come from the frequent-pair relation's
+        self-joins (Apriori), support from keyed joins on the basket
+        relation — all equi joins; both relations' exchanges run once
+        and are reused."""
         plan = self._plan(spark, sf_dir, "ext_freq_triples")
-        assert "InMemoryTableScan" in plan, plan
+        reused = reused_exchanges(spark, sf_dir, "ext_freq_triples")
+        assert "Exchange hashpartitioning(u#" in reused, reused  # pairs
+        assert "Exchange hashpartitioning(ok#" in reused, reused  # baskets
         assert "CartesianProduct" not in plan, plan
 
     def test_jsonl_scan_projects_declared_schema(self, spark, sf_dir):
@@ -993,23 +1015,29 @@ class TestSession7Plans:
 
     def test_survival_km_prefix_over_duration_relation(self, spark, sf_dir):
         """At-risk counts and the KM product run over the tiny duration
-        relation (cached) — the event table aggregates exactly once."""
+        relation — the event table aggregates exactly once (its
+        user-keyed exchange is reused)."""
         plan = self._plan(spark, sf_dir, "ext_survival_km")
-        assert "InMemoryTableScan" in plan, plan
+        reused = reused_exchanges(spark, sf_dir, "ext_survival_km")
+        assert "Exchange hashpartitioning(user_id#" in reused, reused
         assert "CartesianProduct" not in plan, plan
 
     def test_cramers_v_reuses_chi_square_kernel_shape(self, spark, sf_dir):
-        """Contingency cached, marginals broadcast, no data-scale
-        shuffle after the first aggregate."""
+        """Contingency aggregated once (its exchange reused),
+        marginals broadcast, no data-scale shuffle after the first
+        aggregate."""
         plan = self._plan(spark, sf_dir, "ext_cramers_v")
-        assert "InMemoryTableScan" in plan, plan
+        reused = reused_exchanges(spark, sf_dir, "ext_cramers_v")
+        assert "Exchange hashpartitioning(lang#" in reused, reused
         assert "CartesianProduct" not in plan, plan
 
     def test_cuped_single_user_aggregate(self, spark, sf_dir):
         """One user-keyed aggregate feeds both the pooled moments and
-        the per-variant sums (cached); the final math is single-row."""
+        the per-variant sums (its exchange reused); the final math is
+        single-row."""
         plan = self._plan(spark, sf_dir, "ext_cuped")
-        assert "InMemoryTableScan" in plan, plan
+        reused = reused_exchanges(spark, sf_dir, "ext_cuped")
+        assert "Exchange hashpartitioning(user_id#" in reused, reused
         assert plan.count("Exchange hashpartitioning") <= 3, plan
 
     def test_sprt_single_daily_aggregate(self, spark, sf_dir):
@@ -1021,9 +1049,11 @@ class TestSession7Plans:
 
     def test_trimmed_mean_banded_per_type(self, spark, sf_dir):
         """Running counts are (type, band)-keyed windows over the
-        cached distinct-cents relation; totals broadcast back."""
+        distinct-cents relation (its exchange reused); totals broadcast
+        back."""
         plan = self._plan(spark, sf_dir, "ext_trimmed_mean")
-        assert "InMemoryTableScan" in plan, plan
+        reused = reused_exchanges(spark, sf_dir, "ext_trimmed_mean")
+        assert "Exchange hashpartitioning(event_type#" in reused, reused
         for line in plan.splitlines():
             if "Window [sum(cnt" in line:
                 spec = line.split("windowspecdefinition")[1][:90]
@@ -1045,11 +1075,12 @@ class TestSession7Plans:
         assert plan.count("Exchange hashpartitioning") <= 2, plan
 
     def test_token_overlap_joins_type_relation(self, spark, sf_dir):
-        """The (lang, token) type relation is cached and self-joined on
-        the token key; sizes broadcast back — tokens, never documents,
-        carry the join."""
+        """The (lang, token) type relation is built once (its exchange
+        reused) and self-joined on the token key; sizes broadcast back
+        — tokens, never documents, carry the join."""
         plan = self._plan(spark, sf_dir, "ext_token_overlap_matrix")
-        assert "InMemoryTableScan" in plan, plan
+        reused = reused_exchanges(spark, sf_dir, "ext_token_overlap_matrix")
+        assert "Exchange hashpartitioning(lang#" in reused, reused
         assert "CartesianProduct" not in plan, plan
 
     def test_burstiness_single_moment_aggregate(self, spark, sf_dir):
@@ -1151,11 +1182,13 @@ class TestRound4Session2Plans:
         assert "SortMergeJoin" not in plan, plan
 
     def test_shortest_path_reuses_cached_edges(self, spark, sf_dir):
-        """All three BFS rounds must join against the SAME cached edge
-        relation (InMemoryTableScan), not rebuild the lineitem
-        self-join per round; shuffles carry only (id, dist) longs."""
+        """All three BFS rounds must join against the SAME edge build
+        (its exchange runs once, the rounds read it through
+        ReusedExchange), not rebuild the lineitem self-join per round;
+        shuffles carry only (id, dist) longs."""
         plan = self._plan(spark, sf_dir, "ext_shortest_path")
-        assert "InMemoryTableScan" in plan, plan
+        reused = reused_exchanges(spark, sf_dir, "ext_shortest_path")
+        assert "Exchange hashpartitioning(u#" in reused, reused
         assert "CartesianProduct" not in plan, plan
 
     def test_prop_ztest_is_one_partial_aggregate_pass(self, spark, sf_dir):
@@ -1259,7 +1292,8 @@ class TestRound4Session2LateBatchPlans:
 
     def test_clustering_coeff_reuses_cached_oriented_lists(self, spark, sf_dir):
         plan = self._plan(spark, sf_dir, "ext_clustering_coeff")
-        assert "InMemoryTableScan" in plan, plan
+        reused = reused_exchanges(spark, sf_dir, "ext_clustering_coeff")
+        assert "Exchange hashpartitioning(u#" in reused, reused
         assert "CartesianProduct" not in plan, plan
 
     def test_backtest_naive_single_scan_single_window(self, spark, sf_dir):

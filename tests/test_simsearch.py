@@ -157,6 +157,20 @@ class TestIntegerGridVariants:
         # observed 0.34 (sf0.001) / 0.48 (sf0.01); random baseline ~0.01
         assert len(b & p) / len(b) >= 0.2, (len(b & p), len(b))
 
+    def test_mean_vectors_shapes_agree_on_null_vector(self, spark):
+        """The fused (known dim) and exploded centroid updates give the
+        same means when a cell holds a NULL vector: it counts in
+        neither."""
+        assigned = spark.createDataFrame(
+            [(0, 1, [2, 4]), (0, 1, None), (0, 1, [5, 7]), (1, 2, [1, 1])],
+            "sub int, cell int, v array<bigint>",
+        )
+        fused = SS._mean_vectors_int(assigned, ["sub"], dim=2).collect()
+        exploded = SS._mean_vectors_int(assigned, ["sub"]).collect()
+        got = {(r.sub, r.cell): list(r.cv) for r in fused}
+        assert got == {(r.sub, r.cell): list(r.cv) for r in exploded}
+        assert got == {(0, 1): [3, 5], (1, 2): [1, 1]}
+
 
 class TestSemDedup:
     def test_matches_python_reference(self, spark):

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from proto_to_avro_ql_spark.functions import text as TX
@@ -121,9 +122,10 @@ class TestTokenizerFertility:
 class TestTokenizeMatchesOracle:
     """The Spark tokenizer against the oracles' DuckDB spelling, on the
     edge inputs: blank, NULL, mixed whitespace, a vertical tab (Java's
-    \\s matches it, RE2's does not), one token and two tokens."""
+    \\s matches it, RE2's does not), one token, two tokens and a
+    no-break space (Python's \\s matches it, RE2's does not)."""
 
-    CASES = ["", "   ", None, "a\tb\nc", "a\x0bb", "Word", "two  Words"]
+    CASES = ["", "   ", None, "a\tb\nc", "a\x0bb", "Word", "two  Words", "c\xa0d"]
     ORACLE = (
         r"SELECT list_filter(string_split(trim(regexp_replace(lower(?),"
         r" '\s+', ' ', 'g')), ' '), x -> x <> '')"
@@ -153,3 +155,24 @@ class TestTokenizeMatchesOracle:
         )
         assert {r.doc_id for r in pairs} == {3, 6}
         assert [(r.v, r.w) for r in pairs if r.doc_id == 6] == [("two", "words")]
+
+    @pytest.mark.parametrize("name", ["ext_udtf_tokens", "ext_udtf_polymorphic"])
+    def test_python_udtf_tokenizers_match_oracle(self, spark, tmp_path, name):
+        """The Python UDTF entries tokenize the edge cases as their
+        DuckDB oracles do."""
+        import duckdb
+        import pandas as pd
+
+        from proto_to_avro_ql_spark.entry_queries import ORACLES, QUERIES
+        from tests.oracle_check import value_hash
+
+        pd.DataFrame({"doc_id": range(len(self.CASES)), "text": self.CASES}).to_parquet(
+            tmp_path / "documents.parquet"
+        )
+        got = QUERIES[name](spark, str(tmp_path)).toPandas()
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+        )
+        want = con.execute(ORACLES[name]).fetchdf()
+        assert value_hash(got) == value_hash(want), (got, want)

@@ -138,6 +138,12 @@ class TestCacheHygiene:
         assert not new, f"unaccounted cache sites (pair or allowlist): {new}"
         assert not stale, f"stale allowlist keys (prune): {stale}"
 
+    def test_no_function_exceeds_its_site_count(self):
+        # ALLOWED records how many unpaired sites each function may hold
+        from tools.audit_caches import check, scan
+
+        assert not check(scan())["over"]
+
     def test_paired_detection_sees_clustering_family(self):
         # the iterative family releases its loop caches; the scanner
         # must classify those sites as PAIRED, not demand allowlisting
@@ -165,6 +171,53 @@ class TestCacheHygiene:
         from tests import oracle_check
 
         assert "clearCache()" in inspect.getsource(oracle_check.compare)
+
+
+# Entries whose single-shot persists were deleted because exchange
+# reuse already shares their subtrees; the LM entries are the ones that
+# used to pile up cached relations in a long-lived session.
+PERSIST_FREE = [
+    "ext_bm25_search",
+    "ext_katz_vs_kn",
+    "ext_trigram_kn",
+    "ext_kneser_ney",
+    "ext_kneser_ney_holdout",
+    "ext_katz_backoff",
+    "ext_lm_ppl_filter",
+    "ext_good_turing",
+    "ext_entropy_rate",
+    "ext_selfbleu",
+    "ext_pagerank",
+    "ext_chi_square",
+    "ext_cramers_v",
+    "ext_shortest_path",
+    "ext_label_propagation",
+    "ext_pca_power",
+    "ext_cohort_ltv",
+    "ext_stickiness",
+    "ext_assoc_rules",
+    "ext_sim_search_ivf",
+]
+
+
+class TestSessionHygiene:
+    def test_back_to_back_entries_leave_nothing_cached(self, spark, sf_dir):
+        """Run the entries one after another in one session with no
+        clearCache() between them: after each one is materialized the
+        CacheManager is empty and no RDD stays persisted."""
+        from proto_to_avro_ql_spark.entry_queries import QUERIES
+
+        spark.catalog.clearCache()
+        jsc = spark.sparkContext._jsc
+        cache_manager = spark._jsparkSession.sharedState().cacheManager()
+        # earlier tests' localCheckpoint RDDs sit outside the
+        # CacheManager until the context cleaner drops them, so only
+        # growth over this baseline counts
+        baseline = set(jsc.getPersistentRDDs().keySet())
+        for name in PERSIST_FREE:
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            assert cache_manager.isEmpty(), name
+            assert set(jsc.getPersistentRDDs().keySet()) <= baseline, name
 
 
 class TestRepresentativeEntries:
@@ -251,6 +304,37 @@ class TestCountBasedPairing:
         )
         assert all(n == "g" and not p for n, _l, p in sites)
         assert len(sites) == 3
+
+    def test_planted_site_in_allowlisted_function_is_flagged(self, tmp_path):
+        # a NEW persist inside an already-allowlisted function must fail
+        # the gate, not pass under the function's existing entry
+        import ast
+        import os
+
+        from tools.audit_caches import ALLOWED, REPO, check, scan
+
+        key = min(
+            ALLOWED,
+            key=lambda k: os.path.getsize(os.path.join(REPO, k.rsplit(":", 1)[0])),
+        )
+        rel, fn = key.rsplit(":", 1)
+        src = open(os.path.join(REPO, rel)).read()
+        node = next(
+            n
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, ast.FunctionDef) and n.name == fn
+        )
+        last = node.body[-1]
+        lines = src.splitlines(keepends=True)
+        lines.insert(
+            last.lineno - 1, " " * last.col_offset + "_planted = spark.range(1).persist()\n"
+        )
+        dest = tmp_path / rel
+        dest.parent.mkdir(parents=True)
+        dest.write_text("".join(lines))
+        n = ALLOWED[key][0]
+        found = scan(str(tmp_path / "proto_to_avro_ql_spark"))
+        assert check(found)["over"] == {key: (n + 1, n)}
 
     def test_attribution_is_per_innermost_function(self, tmp_path):
         # outer's cache is NOT blessed by an unpersist inside a nested

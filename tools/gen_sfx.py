@@ -18,7 +18,8 @@ Construction (deterministic, no RNG):
   ``factor``; the mix31(doc_id) train/eval split keeps its ~80/20 mix
   because the ids stay dense.
 - embeddings: ``factor`` copies, vec_id' likewise; each copy-k vector
-  is the original ROTATED left by k positions. Rotation preserves the
+  (k > 0) is the original ROTATED left by 1 + k mod (dim - 1)
+  positions, never by 0 whatever the factor. Rotation preserves the
   norm and the coordinate multiset but changes direction, so copies do
   NOT land in the same LSH bucket / near-dup pair as their source —
   replicating identical vectors would inflate the (by-design
@@ -62,8 +63,8 @@ def main() -> None:
                 elif name == rotate_col and k > 0:
                     arr = t[name].combine_chunks()
                     vals = arr.to_pylist()
-                    dim = len(vals[0]) if vals and vals[0] is not None else 0
-                    r = k % dim if dim else 0
+                    dim = next((len(v) for v in vals if v is not None), 0)
+                    r = 1 + k % (dim - 1) if dim > 1 else 0
                     cols[name] = pa.array(
                         [v[r:] + v[:r] if v is not None else None for v in vals],
                         type=arr.type,
