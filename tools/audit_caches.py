@@ -123,9 +123,9 @@ def check(found: dict[str, list[int]]) -> dict:
 # Allowlisted unpaired sites: key = 'relpath:enclosing_function',
 # value = (site count, reason).  "A×/B×" is the interleaved
 # min-of-passes ratio, persist removed vs kept, of build plus a noop
-# write of the full result at sf0.01 / sf0.1 (>= 3 rounds, 4 cores);
-# every persist not listed here measured <= 1.05× at both scales and
-# was deleted.
+# write of the full result at sf0.01 / sf0.1 (>= 3 rounds, 4 cores).
+# The single-shot persists that measured <= 1.05× at both scales were
+# deleted instead of listed.
 _SLOWER = "the entry is slower without it: "
 ALLOWED: dict[str, tuple[int, str]] = {
     # --- read by driver jobs that run while the plan is built ------------
